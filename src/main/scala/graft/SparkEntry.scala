@@ -1,13 +1,18 @@
 package graft
 
 import graft.functions.{TextFunctions => TF, Urls}
-import graft.model.Doc
+import graft.model.{Doc, Paragraph}
 import graft.operators.{Dedup, Multimodal, Segregate, Similarity}
-import graft.sources.{Synth, SynthConfig}
+import graft.sources.{Synth, SynthConfig, Wire}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.GraftExpressionBridge.{column, expression}
+import org.apache.spark.sql.catalyst.expressions.KnownNullable
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampNTZType
+
+import scala.util.control.NonFatal
 
 /** Driver contract — one `queries` entry per operator family (SURVEY.md §2),
   * with a DuckDB oracle for every SQL-expressible one (`oracleSql`). Column
@@ -25,15 +30,20 @@ object SparkEntry {
     * is the file's TRUE scan parallelism no matter what the split config
     * says. */
   private val rowGroupCounts = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-  private def parquetRowGroups(spark: SparkSession, path: String): Int =
-    rowGroupCounts.computeIfAbsent(path, (p: String) =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf())
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try Integer.valueOf(r.getRowGroups.size()) finally r.close()
-      } catch { case _: Throwable => Integer.valueOf(Int.MaxValue) }
-    ).intValue
+  /** An unreadable footer counts as many row groups (no spread) and is not
+    * cached, so a file that appears later is read then. */
+  private def parquetRowGroups(spark: SparkSession, path: String): Int = {
+    val cached = rowGroupCounts.get(path)
+    if (cached != null) cached.intValue
+    else try {
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf())
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val n = try r.getRowGroups.size() finally r.close()
+      rowGroupCounts.put(path, n)
+      n
+    } catch { case NonFatal(_) => Int.MaxValue }
+  }
 
   /** Read a base table and, ONLY when its file is parallelism-degenerate
     * (fewer row groups than half the executor threads — e.g. the sf test
@@ -93,6 +103,16 @@ object SparkEntry {
     * rollup (`get_data_stats.py:45-105` analog) on orders. */
   def entry(spark: SparkSession): DataFrame =
     queries("q_stats_rollup")(spark, "/root/testdata/sf0.001")
+
+  /** Microseconds since the epoch of a TIMESTAMP or TIMESTAMP_NTZ column,
+    * free of the session time zone: a TIMESTAMP_NTZ wall clock is read as
+    * UTC, as DuckDB reads a naive TIMESTAMP. */
+  private def epochMicros(df: DataFrame, name: String): Column =
+    df.schema(name).dataType match {
+      case TimestampNTZType =>
+        timestamp_diff("MICROSECOND", lit(java.time.LocalDateTime.of(1970, 1, 1, 0, 0)), df(name))
+      case _ => unix_micros(df(name))
+    }
 
   // exact-in-decimal, double-out aggregation helper
   private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
@@ -264,13 +284,17 @@ object SparkEntry {
 
     "q_sessionize" -> ((s, dir) => {
       // session id = running count of >30-min gaps (the reference's
-      // running-sum-of-markers pattern, W2)
+      // running-sum-of-markers pattern, W2). The gap is a difference of
+      // double epoch seconds, fraction kept — DuckDB's epoch() arithmetic
+      // (unix_timestamp would truncate to whole seconds)
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
+      val events = t(s, dir, "events")
+      events
+        .withColumn("secs", epochMicros(events, "ts") / 1e6)
+        .withColumn("prev_secs", lag(col("secs"), 1).over(w))
         .withColumn("gap",
-          when(col("prev_ts").isNull, lit(1))
-            .when(unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800, lit(1))
+          when(col("prev_secs").isNull, lit(1))
+            .when(col("secs") - col("prev_secs") > 1800, lit(1))
             .otherwise(lit(0)))
         .withColumn("session_id",
           sum(col("gap")).over(w.rowsBetween(Window.unboundedPreceding, 0)))
@@ -530,8 +554,18 @@ object SparkEntry {
     }),
 
     "q_segregate" -> ((s, dir) => {
+      // the production paragraph kernel over the encoded docs; thresholds
+      // 0/0 keep every paragraph the W1 fold emits, so segregateOracleSql
+      // checks the fold itself
       import s.implicits._
-      Segregate.paragraphs(synthDocs(s).as[Doc]).toDF()
+      val payloads = synthDocs(s).as[Doc]
+        .map(d => (d.doc_id, Wire.encode(Nil, Some(d)))).toDF("doc_id", "payload")
+      val paras = Segregate.paragraphsOfPayloads(payloads, minSents = 0, minWords = 0)
+      // the kernel never emits a null extractor/content; the query keeps
+      // the Paragraph schema (nullable strings) it has always declared
+      paras.select(Encoders.product[Paragraph].schema.map(f =>
+        if (f.nullable) column(KnownNullable(expression(col(f.name)))).as(f.name)
+        else col(f.name)): _*)
     }),
 
     "q_sc_nested" -> ((s, dir) => {
@@ -553,7 +587,7 @@ object SparkEntry {
 
     "q_w1_relational" -> ((s, dir) =>
       // W1(b): the same paragraph fold as a pure window/groupBy plan —
-      // cross-checks the typed fold through an independent DuckDB oracle
+      // cross-checks the byte fold (q_segregate) against the same DuckDB oracle
       Segregate.paragraphsRelational(synthDocs(s))),
 
     "q_rendering_dedup" -> ((s, dir) => {
@@ -1105,7 +1139,7 @@ object SparkEntry {
 
   /** The W1 paragraph fold as portable SQL (same derivation as
     * [[graft.operators.Segregate.paragraphsRelational]]) — the oracle for BOTH
-    * q_segregate (typed fold) and q_w1_relational (relational plan). */
+    * q_segregate (byte fold) and q_w1_relational (relational plan). */
   private def segregateOracleSql: String =
     s"""WITH sp AS (
        |  SELECT doc_id, s.kind AS kind, s.text AS text, s."offset" AS off

@@ -133,29 +133,26 @@ case class WireSpansExpr(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** `wireParagraphs(payload)` — the W1 paragraph fold + P7/P8 filter computed
-  * WHILE the payload bytes are in hand (the fetch projection), as an array
-  * of (page, paragraph_number, content, reference) rows. Paragraphs-at-fetch
-  * removes the tail's dedicated full-payload re-scan: the paragraphs write
-  * then reads only this (column-pruned) array column plus doc_id — at the
-  * mega-wave scale that re-scan was 16 GB + ~700 task launches per round.
-  * Null when the payload carries no doc. Row content is pinned equal to the
-  * typed object path through the shared streaming fold (HashingSpec). */
-case class WireParagraphsExpr(child: Expression, extractor: String = "plain",
-    minSents: Int = 3, minWords: Int = 30) extends UnaryExpression {
+/** `wireParagraphs(payload)` — the paragraph kernel
+  * ([[graft.sources.Wire.paragraphsArrayData]]: W1 fold + P7/P8 filter over
+  * the payload bytes) as an array of (page, paragraph_number, content,
+  * reference) rows; null when the payload carries no doc. It is the one
+  * production paragraph path: the crawl's paragraphs write runs it over the
+  * dedup survivors' payloads, and `q_segregate` over encoded synth docs at
+  * minSents = minWords = 0 (keep every paragraph), which the DuckDB oracle
+  * checks. */
+case class WireParagraphsExpr(child: Expression, minSents: Int = 3, minWords: Int = 30)
+    extends UnaryExpression {
   override def dataType: DataType =
     ArrayType(WireExpressions.ParagraphSchema, containsNull = false)
   override def nullable: Boolean = true
   override def nullSafeEval(input: Any): Any =
-    graft.sources.Wire.paragraphsArrayData(
-      input.asInstanceOf[Array[Byte]], extractor, minSents, minWords)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ext = ctx.addReferenceObj("extractor", extractor, "java.lang.String")
+    graft.sources.Wire.paragraphsArrayData(input.asInstanceOf[Array[Byte]], minSents, minWords)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.sources.Wire.paragraphsArrayData($c, $ext, $minSents, $minWords);
+      ${ev.value} = graft.sources.Wire.paragraphsArrayData($c, $minSents, $minWords);
       ${ev.isNull} = ${ev.value} == null;
     """)
-  }
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
@@ -167,7 +164,8 @@ object WireFunctions {
 
   def docHashesStruct(payload: Column): Column = c(WireDocHashesExpr(e(payload)))
   def wireSpans(payload: Column): Column = c(WireSpansExpr(e(payload)))
-  def wireParagraphs(payload: Column): Column = c(WireParagraphsExpr(e(payload)))
+  def wireParagraphs(payload: Column, minSents: Int = 3, minWords: Int = 30): Column =
+    c(WireParagraphsExpr(e(payload), minSents, minWords))
   def synthFetch(url: Column, retryCount: Column, cfg: SynthConfig,
       minIntervalMicros: Long): Column =
     c(SynthFetchExpr(e(url), e(retryCount), cfg, minIntervalMicros))

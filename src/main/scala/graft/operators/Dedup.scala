@@ -183,7 +183,8 @@ object Dedup {
     *                  order (field/presence delimiters included)
     *   render_hash_<r> = 128-bit streaming hash of exactly the chars of the
     *                  rendering string (equal strings ⇔ equal hashes w.h.p.;
-    *                  pinned vs the string renderings in HashingSpec)
+    *                  the q_rendering_dedup oracle replays the D2→D3 chain
+    *                  on the rendering strings themselves)
     */
   def docHashes(docId: String, priority: Long, court: String, spans: Seq[graft.model.Span]): DocHashes = {
     val sorted = Segregate.sortedByOffset(spans)
@@ -212,8 +213,7 @@ object Dedup {
         prefix = content.lane1 // prefix stage = content lane after span 1
       }
       // renderings: text+heading spans joined with "\n\n" (tables/images
-      // skipped); "null" for null text matches the mkString semantics of the
-      // string renderings (Segregate.renderPlainStr)
+      // skipped), in offset order; a null text renders as "null"
       if (s.kind == "text" || s.kind == "heading") {
         if (!firstPiece) {
           plain.update('\n'); plain.update('\n')

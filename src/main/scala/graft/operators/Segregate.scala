@@ -2,18 +2,21 @@ package graft.operators
 
 import graft.model._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Span-stream rendering (reference P11, `/root/reference/src/extractors/adobe.py:63-93`),
   * paragraph segregation (W1, `src/segregators/adobe_json.py:23-63`) and the
   * sentence/word-count paragraph filter (P7/P8, `src/filters/sent_count_filter.py:31-57`).
   *
-  * All per-document: `spans` is a nested array, so rendering is a columnar
-  * `filter`/`transform`/`array_join` over the array — zero shuffle — and the
-  * stateful paragraph fold is a typed `flatMap` per row (also zero shuffle).
-  * The relational window variant of the fold exists as a cross-check in
-  * SparkEntry ("q_w1_relational").
+  * Rendering is a columnar `filter`/`transform`/`array_join` over the
+  * nested `spans` array — zero shuffle. The production paragraph kernel is
+  * the byte fold [[graft.sources.Wire.paragraphsArrayData]] (exposed as the
+  * `wireParagraphs` column) with [[sentKeepBytes]] as its filter; it runs in
+  * the crawl's paragraphs write and in `q_segregate`. [[segregateDoc]] is the
+  * object-level fold: the byte fold's fallback for offset-unsorted spans and
+  * the reference the tests pin it to. [[paragraphsRelational]] is the same
+  * fold as a window/groupBy plan (`q_w1_relational`).
   */
 object Segregate {
 
@@ -53,6 +56,10 @@ object Segregate {
   }
 
   // ---------- renderings (the "extractors" of our engine, SURVEY.md S9) ----------
+  // The query surface (q_span_render, q_rendering_dedup). The crawl never
+  // builds these strings: its D3 identity is the rendering hashes that
+  // Dedup.docHashes / Wire.docHashesStreaming fold char by char from the
+  // same definitions.
 
   /** Names in declared order — D3 chaining is order-sensitive
     * (`src/pipeline/process.py:114-122`). */
@@ -89,15 +96,6 @@ object Segregate {
     case other      => throw new IllegalArgumentException(s"unknown rendering $other")
   }
 
-  // ---- typed (plain-Scala) twins of the renderings ----
-  // The crawler's per-doc hot kernel runs these instead of the Column
-  // versions: array higher-order functions are CodegenFallback (interpreted)
-  // in Spark, and the interpreted eval's per-element allocation measured
-  // ~10 ms/doc + 25% GC at local[32]. The Column versions remain the
-  // query-surface API; SegregateSpec pins typed == Column on synth docs.
-
-  private val digitsPattern = java.util.regex.Pattern.compile("(?U)\\p{N}+")
-
   /** Spans arrive offset-ordered from every source in this engine — skip the
     * per-doc sort copy when a linear check confirms it. */
   private[graft] def sortedByOffset(spans: Seq[Span]): Seq[Span] = {
@@ -111,23 +109,6 @@ object Segregate {
     }
     if (sorted) spans else spans.sortBy(_.offset)
   }
-
-  def renderPlainStr(spans: Seq[Span]): String =
-    sortedByOffset(spans).iterator
-      .filter(s => s.kind == "text" || s.kind == "heading")
-      .map(_.text).mkString("\n\n")
-
-  def renderNoDigitsStr(spans: Seq[Span]): String =
-    digitsPattern.matcher(renderPlainStr(spans)).replaceAll("")
-
-  def renderMarkedStr(spans: Seq[Span]): String =
-    sortedByOffset(spans).iterator
-      .filter(s => s.kind == "text" || s.kind == "heading")
-      .map { s =>
-        if (s.kind == "heading") "[Heading]\n" + s.text
-        else if (starterFind(s.text)) "[Paragraph]\n" + s.text
-        else s.text
-      }.mkString("\n\n")
 
   // ---------- W1: paragraph segregation ----------
 
@@ -147,7 +128,8 @@ object Segregate {
     *  - paragraphs are numbered sequentially from 1; `page` = pageStart + 1
     *    (Adobe pages are 0-based, `adobe_json.py:49-50`).
     *
-    * Pure Scala, applied via typed flatMap in [[paragraphs]].
+    * Pure Scala over Span objects: the byte fold's offset-unsorted fallback
+    * and the reference it is pinned to in the tests.
     */
   def segregateDoc(docId: String, extractor: String, spans: Seq[Span]): Seq[Paragraph] = {
     val out = Vector.newBuilder[Paragraph]
@@ -195,17 +177,21 @@ object Segregate {
     out.result()
   }
 
-  /** Paragraphs of every doc under every rendering-extractor. Only the "plain"
-    * extractor has a segregator binding (mirrors the reference where only
+  /** Paragraphs (the [[Paragraph]] columns) of (doc_id, payload) rows
+    * through the production kernel — the `wireParagraphs` column, exploded.
+    * Zero shuffle; docless payloads yield no rows. Only the "plain"
+    * extractor has a segregator binding (mirrors the reference, where only
     * adobe_api has one, `src/pipeline/segregate.py:31-36`). */
-  def paragraphs(docs: Dataset[Doc]): Dataset[Paragraph] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap(d => segregateDoc(d.doc_id, "plain", d.spans))
-  }
+  def paragraphsOfPayloads(docs: DataFrame, minSents: Int = 3, minWords: Int = 30): DataFrame =
+    docs.select(col("doc_id"),
+        explode(graft.functions.WireFunctions.wireParagraphs(col("payload"), minSents, minWords)).as("p"))
+      .select(col("doc_id"), lit("plain").as("extractor"), col("p.page").as("page"),
+        col("p.paragraph_number").as("paragraph_number"), col("p.content").as("content"),
+        col("p.reference").as("reference"))
 
   /** W1(b): the paragraph fold as a PURE RELATIONAL plan (windows + groupBy),
-    * general-case equivalent of [[segregateDoc]] — cross-checked against the
-    * typed fold in SegregateSpec and DuckDB-oracled as `q_w1_relational`.
+    * general-case equivalent of [[segregateDoc]] — cross-checked against it
+    * in SegregateSpec and DuckDB-oracled as `q_w1_relational`.
     *
     * Derivation: every starter or heading opens a new group (`grp` = running
     * count of boundary rows per doc, ordered by offset); a group is an
@@ -214,9 +200,9 @@ object Segregate {
     * group = the trailing paragraph, which the reference never flushes).
     * Content = starter text minus its reference numeral + following
     * non-boundary texts in offset order; page = headings before the starter
-    * + 1. Zero-shuffle claim does NOT hold here (two window exchanges) — this
-    * variant exists because it is SQL-portable and oracle-checkable, while
-    * the typed fold is the production path. */
+    * + 1. Not zero-shuffle (two window exchanges): this variant exists
+    * because it is SQL-portable and oracle-checkable, while the byte fold
+    * is the production path. */
   def paragraphsRelational(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sp = docs
@@ -259,11 +245,14 @@ object Segregate {
   }
 
   // ---------- P7/P8: sentence/word-count filter ----------
-
-  /** Sentence count via regex boundary split (declared deviation from NLTK
-    * punkt — FIXTURES.md §5): boundaries are [.!?]+ followed by whitespace. */
-  def sentenceCount(content: Column): Column =
-    size(filter(split(content, "[.!?]+(\\s+|$)"), s => length(trim(s)) > 0))
+  //
+  // Keep a paragraph iff sentences >= minSents OR content words >= minWords
+  // (defaults 3/30, `sent_count_filter.py:31-37,54-57`). Sentences are the
+  // non-blank segments of a split on `[.!?]+(\s+|$)` (declared deviation
+  // from NLTK punkt — FIXTURES.md §5); content words are the non-empty
+  // tokens of a split of the lowercased text on `[^\p{L}]+` that are not
+  // [[Stopwords]]. The kernel below decides this on the undecoded UTF-8
+  // slice; the regex definitions live on as the test reference.
 
   /** English stopword list (fixed, small — the filter only needs a ratio). */
   val Stopwords: Seq[String] = Seq(
@@ -277,64 +266,8 @@ object Segregate {
     "through", "during", "before", "after", "above", "below", "up", "down",
     "out", "off", "over", "under", "again", "further", "once", "own", "same")
 
-  /** Content words: alphabetic tokens not in the stopword list
-    * (`sent_count_filter.py:46-52`). */
-  def contentWordCount(content: Column): Column = {
-    val words = split(lower(content), "[^\\p{L}]+")
-    size(filter(words, w => length(w) > 0 && !w.isin(Stopwords.map(lit): _*)))
-  }
-
-  /** Keep iff sentences >= minSents OR content words >= minWords (defaults
-    * 3/30, `sent_count_filter.py:31-37,54-57`). */
-  def sentCountFilter(paras: DataFrame, minSents: Int = 3, minWords: Int = 30): DataFrame =
-    paras.filter(
-      sentenceCount(col("content")) >= minSents ||
-        contentWordCount(col("content")) >= minWords)
-
-  // precompiled: String.split(String) recompiles multi-char regexes on every
-  // call — at millions of paragraphs/round that was two Pattern.compile per
-  // paragraph in the crawl hot path
-  private val sentBoundaryPattern = java.util.regex.Pattern.compile("[.!?]+(\\s+|$)")
   private val nonLetterPattern = java.util.regex.Pattern.compile("[^\\p{L}]+")
-
-  /** Allocation-free scan equivalent of
-    * `sentBoundaryPattern.split(content).count(_.trim.nonEmpty)`: a boundary
-    * is a [.!?]+ run followed by ASCII whitespace or end-of-string (regex \s
-    * without (?U) is ASCII); a segment counts iff it contains any char
-    * > ' ' (String.trim semantics). The split-based version allocated a
-    * String array + trimmed copies per paragraph — at ~10M paragraphs per
-    * crawl wave the two regex splits in sentKeepStr were the paragraph
-    * stage's dominant cpu (pinned ≡ regex in SegregateSpec). */
-  private[graft] def sentenceCountScan(content: String): Int = {
-    val n = content.length
-    @inline def isPunct(c: Char) = c == '.' || c == '!' || c == '?'
-    @inline def isWs(c: Char) = c == ' ' || (c >= '\t' && c <= '\r')
-    var i = 0
-    var sents = 0
-    var segHasContent = false
-    while (i < n) {
-      val c = content.charAt(i)
-      if (isPunct(c)) {
-        var j = i + 1
-        while (j < n && isPunct(content.charAt(j))) j += 1
-        if (j >= n || isWs(content.charAt(j))) {
-          // boundary: punct run + (ws run | end)
-          while (j < n && isWs(content.charAt(j))) j += 1
-          if (segHasContent) sents += 1
-          segHasContent = false
-          i = j
-        } else {
-          segHasContent = true // punct run embedded in a segment
-          i = j
-        }
-      } else {
-        if (c > ' ') segHasContent = true
-        i += 1
-      }
-    }
-    if (segHasContent) sents += 1
-    sents
-  }
+  private lazy val StopwordSet: Set[String] = Stopwords.toSet
 
   private lazy val MaxStopwordLen: Int = Stopwords.map(_.length).max
 
@@ -385,129 +318,45 @@ object Segregate {
     v == k
   }
 
-  /** Early-exit scan equivalent of the content-word count
-    * (`nonLetterPattern.split(content.toLowerCase).count(w => w.nonEmpty &&
-    * !stopword)` >= minWords): tokens are maximal \p{L} runs; ASCII tokens
-    * longer than the longest stopword count immediately with no allocation;
-    * candidate-length tokens allocate one small lowercase string for the set
-    * lookup; the scan RETURNS as soon as minWords is reached. Any non-ASCII
-    * char falls back to the regex path (String.toLowerCase is locale- and
-    * length-unstable off ASCII — e.g. İ lowercases to two chars — and the
-    * scan must match it exactly; the corpus is ASCII, so the fallback is
-    * cold). */
-  private def wordKeepScan(content: String, minWords: Int): Boolean = {
-    val n = content.length
-    var i = 0
-    var words = 0
-    while (i < n) {
-      var c = content.charAt(i)
-      if (c >= 0x80) { // non-ASCII: exact regex semantics
-        val ws = nonLetterPattern.split(content.toLowerCase)
-          .count(w => w.nonEmpty && !StopwordSet.contains(w))
-        return ws >= minWords
-      }
-      if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')) {
-        val start = i
-        var ascii = true
-        while (i < n && {
-          c = content.charAt(i)
-          if (c >= 0x80) ascii = false
-          (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
-        }) i += 1
-        if (!ascii) { // token ran into non-ASCII territory: fall back
-          val ws = nonLetterPattern.split(content.toLowerCase)
-            .count(w => w.nonEmpty && !StopwordSet.contains(w))
-          return ws >= minWords
-        }
-        val len = i - start
-        if (len > MaxStopwordLen) words += 1
-        else {
-          var acc = 0L
-          var j = start
-          while (j < i) {
-            val ch = content.charAt(j)
-            val lc = if (ch >= 'A' && ch <= 'Z') ch + 32 else ch.toInt
-            acc = (acc << 5) | (lc - 'a' + 1).toLong
-            j += 1
-          }
-          if (!isStopwordPacked(acc)) words += 1
-        }
-        if (words >= minWords) return true
-      } else i += 1
-    }
-    words >= minWords
-  }
-
-  /** Typed twin of [[sentCountFilter]] (same semantics — pinned equal in
-    * SegregateSpec/HashingSpec); used in the crawler's hot path. Both legs
-    * are early-exit scans: the filter only ever needs "reached the
-    * threshold", never the exact counts — the original two
-    * `Pattern.split`s per paragraph (array + substring allocations, full
-    * traversals) were 83% of the whole paragraph stage's cpu at ~10M
-    * paragraphs per crawl wave. */
-  def sentKeepStr(content: String, minSents: Int = 3, minWords: Int = 30): Boolean = {
-    // word leg first: it early-exits after ~minWords tokens, while the
-    // sentence leg must scan to the minSents-th boundary (the whole string
-    // when there are few); OR-semantics make the order free
-    if (wordKeepScan(content, minWords)) return true
-    sentenceScanAtLeast(content, minSents)
-  }
-
-  /** [[sentenceCountScan]] with early exit at `minSents`. */
-  private def sentenceScanAtLeast(content: String, minSents: Int): Boolean = {
-    val n = content.length
-    @inline def isPunct(c: Char) = c == '.' || c == '!' || c == '?'
-    @inline def isWs(c: Char) = c == ' ' || (c >= '\t' && c <= '\r')
-    var i = 0
-    var sents = 0
-    var segHasContent = false
-    while (i < n) {
-      val c = content.charAt(i)
-      if (isPunct(c)) {
-        var j = i + 1
-        while (j < n && isPunct(content.charAt(j))) j += 1
-        if (j >= n || isWs(content.charAt(j))) {
-          while (j < n && isWs(content.charAt(j))) j += 1
-          if (segHasContent) { sents += 1; if (sents >= minSents) return true }
-          segHasContent = false
-          i = j
-        } else { segHasContent = true; i = j }
-      } else {
-        if (c > ' ') segHasContent = true
-        i += 1
-      }
-    }
-    if (segHasContent) sents += 1
-    sents >= minSents
-  }
-
-  private lazy val StopwordSet: Set[String] = Stopwords.toSet
-
-  // ---- UTF-8 byte-slice twins of the paragraph filter ----
-  //
-  // The streaming paragraph kernel (Wire.paragraphsFilteredStreaming) folds
-  // span bytes without decoding; these run the SAME filter decisions on the
-  // undecoded slice. Exactness: all delimiter classes here are ASCII
-  // ('.', '!', '?', ' ', '\t'..'\r', letters), and every byte of a multi-byte
-  // UTF-8 sequence is ≥ 0x80, so byte-wise classification agrees with
-  // char-wise on well-formed input; the one place semantics depend on
-  // Unicode classes (the word leg's \p{L} tokens / toLowerCase) detects the
-  // first ≥ 0x80 byte and falls back to the decoded-String path. Pinned
-  // equal to sentKeepStr in SegregateSpec (ASCII + non-ASCII adversarial).
-
-  /** [[sentKeepStr]] on the UTF-8 slice `[start, end)`. */
+  /** The P7/P8 decision on the UTF-8 slice `[start, end)` — the paragraph
+    * kernel's filter, run on the fold's content scratch without decoding.
+    * Both legs are early-exit scans (the filter only needs "reached the
+    * threshold", never the exact counts; the original two `Pattern.split`s
+    * per paragraph were 83% of the paragraph stage's cpu at ~10M
+    * paragraphs per crawl wave). Word leg first: it exits after ~minWords
+    * tokens, while the sentence leg scans to the minSents-th boundary.
+    *
+    * Exactness: the sentence delimiters and the ASCII word classes are
+    * ASCII, and every byte of a multi-byte UTF-8 sequence is ≥ 0x80, so
+    * byte-wise classification agrees with char-wise on well-formed input.
+    * The one Unicode-dependent step (\p{L} tokens, `toLowerCase`, which is
+    * length-unstable off ASCII — İ lowercases to two chars) sees its first
+    * ≥ 0x80 byte and counts words by regex on the decoded slice instead;
+    * the corpus is ASCII, so that branch is cold. */
   def sentKeepBytes(b: Array[Byte], start: Int, end: Int,
       minSents: Int = 3, minWords: Int = 30): Boolean = {
     val w = wordKeepBytes(b, start, end, minWords)
     if (w > 0) return true
-    if (w < 0) // non-ASCII: exact String/regex semantics
-      return sentKeepStr(new String(b, start, end - start, java.nio.charset.StandardCharsets.UTF_8),
-        minSents, minWords)
+    if (w < 0) {
+      val decoded = new String(b, start, end - start, java.nio.charset.StandardCharsets.UTF_8)
+      val words = nonLetterPattern.split(decoded.toLowerCase)
+        .count(t => t.nonEmpty && !StopwordSet.contains(t))
+      if (words >= minWords) return true
+    }
     sentenceScanBytesAtLeast(b, start, end, minSents)
   }
 
-  /** Word leg on bytes: 1 = keep, 0 = fail, -1 = non-ASCII seen (caller
-    * must fall back to the String path for exact \p{L}/lowercase behavior). */
+  /** [[sentKeepBytes]] on a String (encoded once to UTF-8) — for the byte
+    * fold's offset-unsorted fallback, whose paragraphs are objects. */
+  def sentKeep(content: String, minSents: Int = 3, minWords: Int = 30): Boolean = {
+    val b = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    sentKeepBytes(b, 0, b.length, minSents, minWords)
+  }
+
+  /** Word leg: 1 = keep, 0 = fail, -1 = non-ASCII seen (the caller then
+    * counts by regex on the decoded slice for exact \p{L}/lowercase
+    * behavior). ASCII tokens longer than the longest stopword count without
+    * a lookup; shorter ones pack into a Long for [[isStopwordPacked]]. */
   private def wordKeepBytes(b: Array[Byte], start: Int, end: Int, minWords: Int): Int = {
     var i = start
     var words = 0
@@ -538,8 +387,10 @@ object Segregate {
     if (words >= minWords) 1 else 0
   }
 
-  /** [[sentenceScanAtLeast]] on bytes (delimiters all ASCII; ≥ 0x80 bytes
-    * classify as content, as their decoded chars would). */
+  /** Sentence leg, early exit at `minSents`: a boundary is a [.!?]+ run
+    * followed by ASCII whitespace (regex \s without (?U)) or the end; a
+    * segment counts iff it holds a byte > ' ' (String.trim semantics —
+    * ≥ 0x80 bytes are content, as their decoded chars would be). */
   private def sentenceScanBytesAtLeast(b: Array[Byte], start: Int, end: Int, minSents: Int): Boolean = {
     @inline def isPunct(c: Int) = c == '.' || c == '!' || c == '?'
     @inline def isWs(c: Int) = c == ' ' || (c >= '\t' && c <= '\r')
@@ -564,14 +415,5 @@ object Segregate {
     }
     if (segHasContent) sents += 1
     sents >= minSents
-  }
-
-  /** Segregate + filter in one typed pass (zero shuffles, zero interpreted
-    * column HOFs — the crawler's paragraph path). */
-  def paragraphsFiltered(docs: Dataset[Doc], minSents: Int = 3, minWords: Int = 30): Dataset[Paragraph] = {
-    import docs.sparkSession.implicits._
-    docs.flatMap(d =>
-      segregateDoc(d.doc_id, "plain", d.spans)
-        .filter(p => sentKeepStr(p.content, minSents, minWords)))
   }
 }

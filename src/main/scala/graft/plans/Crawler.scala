@@ -86,6 +86,44 @@ object Crawler {
   val FetchLogTable = "fetch_log"
   val MetricsTable = "metrics"
 
+  /** Crawl-state table codec (fetch_log, docs, paras, seen/metrics deltas).
+    * snappy, MEASURED (round 4, interleaved A/B pairs): zstd-3 compresses
+    * the vocab-modeled text ~19× smaller but ran 19-30% slower at local[32]
+    * in three consecutive adjacent pairs (codec CPU + the collapse of
+    * byte-sized split planning under high compression outweigh the saved
+    * bus bytes); lz4_raw (~9× smaller than snappy) was statistically
+    * indistinguishable across five 32-core and five 8-core alternations
+    * (effect, if any, below the host's ±40% weather) and wrote 17-23% more
+    * bytes than snappy in round 6. An uncompressed fetch_log MEASURED
+    * 2.5-3× slower at 32 threads with unchanged 8-thread wall: the log rides
+    * node-local scratch, so every saved on-disk byte is saved memory
+    * traffic on the bandwidth-saturated side of the scaling pair. */
+  private val CrawlCodec = "snappy"
+
+  /** fetch_log files of 5000 rows ≈ 25 MB: still split into ~3 scan tasks
+    * each by the 8 MB bins (skew control intact), but 5× fewer files than
+    * the old 1000-row bound — measured 8% faster at local[32] AND 20% at
+    * local[8] (per-file task-launch/footer/commit overhead steals worker
+    * cpu) with ~40 GB less allocation per wave. */
+  private val FetchLogRecsPerFile = 5000L
+
+  /** fetch_log row groups of 32 MB (parquet default 128 MB): every
+    * concurrent write task holds one open row group's pages LIVE on heap —
+    * at 32 writers the default block size promoted ~4 GB of page buffers
+    * per wave into the old gen and triggered multi-second Full GCs (gc log,
+    * round 4). The 8 MB scan bins split these files at row-group grain
+    * regardless. */
+  private val FetchLogBlockBytes = 32L * 1024 * 1024
+
+  /** Tail scan tasks per executor thread. ×2 (not ×4), MEASURED r5 at
+    * local[32] over interleaved pairs and kept in r6: the two
+    * payload-consuming tail stages run concurrently, so ×2 already puts ~4
+    * write tasks per worker thread in flight while HALVING the number of
+    * concurrent open parquet writers (page/slab buffers were the tail's top
+    * allocation site) — tail wall 12.7/8.5 → 7.3/6.4 s at 32 cores, a wash
+    * at 8 (the width where buffers never contended). */
+  private val TailTasksMult = 2
+
   def filterDir(workDir: String): String = s"$workDir/filters"
 
   /** Seen table across all committed rounds (exact side of D1); None when no
@@ -169,18 +207,7 @@ object Crawler {
     // task count no longer rides the bin size at all.
     spark.conf.set("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
     spark.conf.set("spark.sql.files.openCostInBytes", (512L * 1024).toString)
-    // Crawl-state table codec (fetch_log, docs, paras, seen/metrics deltas).
-    // snappy, MEASURED (round 4, interleaved A/B pairs): zstd-3 compresses
-    // the vocab-modeled text ~19× smaller but ran 19-30% slower at local[32]
-    // in three consecutive adjacent pairs (codec CPU + the collapse of
-    // byte-sized split planning under high compression outweigh the saved
-    // bus bytes); lz4_raw (~9× smaller than snappy) was statistically
-    // indistinguishable across five 32-core and five 8-core alternations
-    // (effect, if any, below the host's ±40% weather). The knob stays for
-    // re-testing on quieter hardware, where lz4's fewer durable bytes
-    // should pay on the write-bandwidth-ceiling story.
-    spark.conf.set("spark.sql.parquet.compression.codec",
-      sys.env.getOrElse("GRAFT_CRAWL_CODEC", "snappy"))
+    spark.conf.set("spark.sql.parquet.compression.codec", CrawlCodec)
     // Hadoop vectored IO reads pages through a weak-ref'd buffer pool — under
     // crawl-wave GC pressure the weak refs die and every read re-allocates
     // (16.8 GB per wave, JFR round 4). Its range-coalescing win targets
@@ -188,10 +215,6 @@ object Crawler {
     // model — and the bench's tmpfs) it is pure extra copies.
     spark.sparkContext.hadoopConfiguration
       .set("parquet.hadoop.vectored.io.enabled", "false")
-    // dev knob for write-churn A/B: parquet page size (bytes) for all crawl
-    // table writes; unset = parquet-mr default (1 MB)
-    sys.env.get("GRAFT_PARQUET_PAGE").foreach(v =>
-      spark.sparkContext.hadoopConfiguration.set("parquet.page.size", v))
     // Payload-aware vectorized-reader shape: the default 4096-row batch
     // means a ~60 MB on-heap column vector PER TASK for the ~15 KB binary
     // payload column — reserveInternal alone was 90 GB (22%) of the mega
@@ -214,14 +237,6 @@ object Crawler {
     import spark.implicits._
 
     tuneScanGranularity(spark)
-
-    val __timing = sys.env.contains("GRAFT_TIMING")
-    var __t = System.nanoTime()
-    def tick(label: String): Unit = if (__timing) {
-      val now = System.nanoTime()
-      println(f"      [t] $label: ${(now - __t) / 1e9}%.1fs")
-      __t = now
-    }
 
     // Stage attribution: name every job's call site (thread-local, so each
     // concurrent Future names its own jobs) — the 8-vs-32 scaling work needs
@@ -266,7 +281,6 @@ object Crawler {
         when($"__dup", lit("dup")).when($"__robots_denied", lit("robots")))
       .select((fCols.map(col) :+ $"__drop"): _*)
       .persist()
-    tick("d1-probe")
 
     // ---- politeness scheduling + fetch ----
     // Scheduling counters ride the scheduling mapPartitions as accumulators
@@ -275,7 +289,6 @@ object Crawler {
     // of fixed wall per round, paid identically at every parallelism.
     val schedCtr = graft.operators.SchedCounters.create(spark)
     val sched = Politeness.scheduleFlagged(flagged, cfg, Some(schedCtr)).persist()
-    tick("schedule")
 
     // ---- fetch → durable events table (fetch_log) ----
     // The raw fetch output carries the doc spans — a WIDE frame. It is
@@ -320,35 +333,14 @@ object Crawler {
     // bounded files ⇒ downstream scans parallelize evenly even though the
     // fetch partitioning is politeness-skewed (dominant court hosts)
     val fetchLogCount = named("fetch+log-write")(Snapshots.writeTable(workDir, round, FetchLogTable, eventsRaw,
-      // 5000 rows ≈ 25 MB files: still split into ~3 scan tasks each by the
-      // 8 MB bins (skew control intact), but 5× fewer files than the old
-      // 1000-row bound — measured 8% faster at local[32] AND 20% at local[8]
-      // (per-file task-launch/footer/commit overhead steals worker cpu) with
-      // ~40 GB less allocation per wave
-      maxRecordsPerFile = sys.env.getOrElse("GRAFT_FETCHLOG_RECS_PER_FILE", "5000").toLong,
-      // compression rides the session default (snappy, GRAFT_CRAWL_CODEC —
-      // tuneScanGranularity has the round-4 zstd/lz4 A/B verdict): an
-      // uncompressed log was tried and MEASURED 2.5-3× slower at 32 threads
-      // with unchanged 8-thread wall — the log rides the node-local scratch
-      // (tmpfs in the bench), so every saved on-disk byte is saved MEMORY
-      // traffic, and the 32-wide side of the scaling pair is exactly the
-      // bandwidth-saturated one.
-      compression = sys.env.get("GRAFT_FETCHLOG_CODEC").orNull,
+      maxRecordsPerFile = FetchLogRecsPerFile,
       // no min/max statistics for the opaque payload blob: nobody range-
       // predicates on payload bytes, and parquet's stats tracking copies
       // every new extreme of a ~26 KB binary (Binary.copy inside
       // updateStats profiled at 4 GB/wave) into footers nobody reads
       extraOptions = Map(
         "parquet.column.statistics.enabled#payload" -> "false",
-        // 32 MB row groups (default 128 MB): every concurrent write task
-        // holds one open row group's pages LIVE on heap, and uncompressed
-        // payload pages doubled that footprint — at 32 writers the default
-        // block size promoted ~4 GB of page buffers per wave into the old
-        // gen and triggered multi-second Full GCs (gc log, round 4). The
-        // 16 MB scan bins split these files at row-group grain regardless.
-        "parquet.block.size" ->
-          (sys.env.getOrElse("GRAFT_FETCHLOG_BLOCK_MB", "32").toLong * 1024 * 1024).toString)))
-    tick("fetch+write-events")
+        "parquet.block.size" -> FetchLogBlockBytes.toString)))
     // valid now: the write above materialized the sched cache
     val scheduledCount = schedCtr.scheduled
     val deferredCount = schedCtr.deferred
@@ -394,7 +386,6 @@ object Crawler {
     val evAggF = Future(named("ev-agg")(eventsNarrow.agg(
       count(when($"status" === "ok", 1)).as("ok"),
       count(when($"status" === "ok" && $"kind" === "pdf", 1)).as("docs_raw")).collect()(0)))
-    tick("ev-agg")
 
     val okEvents = events.filter($"status" === "ok")
     val okNarrow = eventsNarrow.filter($"status" === "ok")
@@ -535,7 +526,6 @@ object Crawler {
     val judgCount =
       if (pdfOnly) 0L
       else named("judgments-write")(Snapshots.writeTable(workDir, round, JudgmentsTable, judgKept))
-    tick("judgments-write")
     // pdf-only rounds: judgKept is already an empty LocalRelation — reuse it
     // instead of re-reading a zero-row table (schema-infer + scan-plan
     // latency)
@@ -583,7 +573,6 @@ object Crawler {
     // the judgments chain — by the time the routing windows finish, the
     // hash scan is done or nearly so.
     Await.result(keptMaterializedF, Duration.Inf)
-    tick("docs-dedup")
     // survivors' spans decode ZERO-COPY (UTF8String slices of the payload
     // array, straight to Catalyst rows — WireSpansExpr): the round-3 UDF
     // decoded Seq[Span] objects for the struct encoder to re-encode, and that
@@ -595,14 +584,7 @@ object Crawler {
     // conf overhead. Coalesce (no shuffle: adjacent bins merge into one
     // task) to ~4 waves per thread; on a cluster defaultParallelism scales
     // with executors, so the grain stays right at any width.
-    // ×2 (not ×4), MEASURED r5 at local[32] over interleaved pairs: the two
-    // payload-consuming tail stages run concurrently, so ×2 already puts
-    // ~4 write tasks per worker thread in flight while HALVING the number of
-    // concurrent open parquet writers (page/slab buffers were the tail's
-    // top allocation site) — tail wall 12.7/8.5 → 7.3/6.4 s at 32 cores,
-    // a wash at 8 (the width where buffers never contended).
-    val tailTasks = math.max(1, spark.sparkContext.defaultParallelism *
-      sys.env.getOrElse("GRAFT_TAIL_TASKS_MULT", "2").toInt)
+    val tailTasks = math.max(1, spark.sparkContext.defaultParallelism * TailTasksMult)
     val docsKept = okEvents.filter($"kind" === "pdf")
       .select($"doc_id", $"payload")
       .coalesce(tailTasks)
@@ -623,12 +605,8 @@ object Crawler {
         .select($"doc_id", $"payload")
         .coalesce(tailTasks)
         .join(broadcast(keptNarrow.select($"doc_id")), Seq("doc_id"))
-        .select($"doc_id",
-          explode(graft.functions.WireFunctions.wireParagraphs($"payload")).as("p"))
-        .select($"doc_id", lit("plain").as("extractor"), $"p.page".as("page"),
-          $"p.paragraph_number".as("paragraph_number"), $"p.content".as("content"),
-          $"p.reference".as("reference"))
-      Snapshots.writeTable(workDir, round, ParagraphsTable, paras)
+      Snapshots.writeTable(workDir, round, ParagraphsTable,
+        graft.operators.Segregate.paragraphsOfPayloads(paras))
     } }
 
     // ---- remaining tables + atomic manifest commit ----
@@ -659,7 +637,6 @@ object Crawler {
       DocsTable -> Await.result(docsWriteF, Duration.Inf),
       JudgmentsTable -> judgCount,
       FetchLogTable -> fetchLogCount)
-    tick("tail-writes")
     val docsCount = counts(DocsTable)
     Snapshots.commitManifest(workDir, round, counts,
       lineage = Map(
@@ -689,9 +666,7 @@ object Crawler {
       val fCuckoo = Future(named("cuckoo-update")(SeenSet.addToFilters(committedSeenDelta, filterDir(workDir))))
       val fBloom = Future(named("bloom-update")(SeenSet.addToBloom(committedSeenDelta, filterDir(workDir))))
       Await.result(fCuckoo, Duration.Inf)
-      tick("cuckoo-update")
       Await.result(fBloom, Duration.Inf)
-      tick("bloom-update")
     }
 
     // periodic history compaction (Iceberg rewrite_data_files analog): fold
@@ -702,7 +677,6 @@ object Crawler {
       Seq(SeenTable, DocsTable, JudgmentsTable, MergeRequestsTable)
         .map(t => Future(named(s"compact-$t")(Snapshots.compact(spark, workDir, t, round))))
         .foreach(Await.result(_, Duration.Inf))
-      tick("compact")
     }
 
     val committedFrontier = spark.read

@@ -404,105 +404,34 @@ object Wire {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
   }
 
-  /** Streaming twin of `Segregate.segregateDoc + sentKeepStr` over the
-    * payload bytes — the paragraph fold without Span/Doc objects (the
-    * object-decode fold was the crawl round's single heaviest stage: 210
-    * cpu-s + 38 s GC at local[32] in the round-4 attribution). Only two
-    * kinds of Strings materialize: starter-span texts (the reference-numeral
-    * regex needs a String) and the output paragraph contents; every other
-    * span's chars stream straight into the content builder, and skipped
-    * spans (tables, images, text outside an open paragraph) are never
-    * decoded at all. Pinned ≡ the object path in SegregateSpec. Falls back
-    * to the object fold if spans arrive offset-unsorted (same contract as
-    * [[docHashesStreaming]]). */
-  /** Survivor-paragraph consumer for [[paragraphsFoldStreaming]] — a trait,
-    * not a Function6, so the per-paragraph emit stays unboxed. `buf` is a
-    * reusable scratch: the slice `[start, start+len)` is only valid inside
-    * the call. */
-  trait ParaSink {
-    def emit(page: Int, seq: Int, buf: Array[Byte], start: Int, len: Int,
-        reference: String): Unit
-  }
-
-  def paragraphsFilteredStreaming(payload: Array[Byte], extractor: String,
-      minSents: Int = 3, minWords: Int = 30): Seq[graft.model.Paragraph] = guarded("paragraphsFilteredStreaming", payload) {
-    if (payload == null) return Nil
-    val p0 = docBlockStart(payload)
-    if (p0 < 0) return Nil
-    // length -1 encodes a null doc_id (putStr null contract) — mirror the
-    // object path (decodeDoc yields Doc(null, spans)) instead of crashing
-    val docIdLen = readIntAt(payload, p0)
-    val docId =
-      if (docIdLen < 0) null else new String(payload, p0 + 4, docIdLen, UTF_8)
-    val out = Vector.newBuilder[graft.model.Paragraph]
-    val rc = paragraphsFoldStreaming(payload, minSents, minWords, new ParaSink {
-      def emit(page: Int, seq: Int, buf: Array[Byte], start: Int, len: Int,
-          reference: String): Unit =
-        out += graft.model.Paragraph(docId, extractor, page, seq,
-          new String(buf, start, len, UTF_8), reference)
-    })
-    if (rc == FoldUnsorted) // honor the sort contract via the object path
-      decodeDoc(payload).toSeq.flatMap(d =>
-        graft.operators.Segregate.segregateDoc(d.doc_id, extractor, d.spans)
-          .filter(q => graft.operators.Segregate.sentKeepStr(q.content, minSents, minWords)))
-    else out.result()
-  }
-
-  /** The fetch-projection twin ([[graft.functions.WireFunctions.wireParagraphs]]):
-    * survivor paragraphs as Catalyst rows (page, paragraph_number, content,
-    * reference), content built straight from the byte scratch. Null when the
-    * payload carries no doc — mirrors wireSpans/docHashesStruct. */
-  def paragraphsArrayData(payload: Array[Byte], extractor: String,
-      minSents: Int, minWords: Int): org.apache.spark.sql.catalyst.util.ArrayData = guarded("paragraphsArrayData", payload) {
+  /** The paragraph kernel: the W1 fold ([[graft.operators.Segregate.segregateDoc]])
+    * + P7/P8 filter ([[graft.operators.Segregate.sentKeepBytes]]) streamed
+    * off the payload bytes, survivors as Catalyst rows (page,
+    * paragraph_number, content, reference) for
+    * [[graft.functions.WireFunctions.wireParagraphs]]. Null when the payload
+    * carries no doc — mirrors wireSpans/docHashesStruct.
+    *
+    * No Span/Doc objects (the object-decode fold was the crawl round's
+    * single heaviest stage: 210 cpu-s + 38 s GC at local[32] in the round-4
+    * attribution). Strings materialize only for reference numerals; every
+    * other span's bytes stream straight into the content scratch, and
+    * skipped spans (tables, images, text outside an open paragraph) are
+    * never decoded. Spans that arrive offset-unsorted (never for Synth
+    * payloads, whose spans are generated in reading order) take the object
+    * fold instead, which sorts — the same contract as [[docHashesStreaming]]. */
+  def paragraphsArrayData(payload: Array[Byte], minSents: Int,
+      minWords: Int): org.apache.spark.sql.catalyst.util.ArrayData = guarded("paragraphsArrayData", payload) {
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     import org.apache.spark.unsafe.types.UTF8String
     if (payload == null) return null
-    if (docBlockStart(payload) < 0) return null
-    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
-    val rc = paragraphsFoldStreaming(payload, minSents, minWords, new ParaSink {
-      def emit(page: Int, seq: Int, buf: Array[Byte], start: Int, len: Int,
-          reference: String): Unit =
-        out += new GenericInternalRow(Array[Any](page, seq,
-          // MUST copy: the ParaSink contract says the slice is only valid
-          // inside this call (buf is the reusable fold scratch), and
-          // UTF8String.fromBytes(buf, ..) WRAPS the array — an aliased view
-          // would be overwritten by the next paragraph before Catalyst
-          // copies the returned array into the output row (caught live in
-          // round 4: every row read back as the last paragraph's bytes).
-          // One exact-size copy per filter SURVIVOR, same as the String the
-          // object path materializes.
-          UTF8String.fromBytes(java.util.Arrays.copyOfRange(buf, start, start + len)),
-          if (reference == null) null else UTF8String.fromString(reference)))
-    })
-    if (rc == FoldUnsorted) {
-      out.clear()
-      decodeDoc(payload).foreach(d =>
-        graft.operators.Segregate.segregateDoc(d.doc_id, extractor, d.spans)
-          .filter(q => graft.operators.Segregate.sentKeepStr(q.content, minSents, minWords))
-          .foreach(q => out += new GenericInternalRow(Array[Any](q.page, q.paragraph_number,
-            UTF8String.fromString(q.content),
-            if (q.reference == null) null else UTF8String.fromString(q.reference)))))
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-  }
-
-  private val FoldOk = 0
-  private val FoldUnsorted = 1
-
-  /** The W1 fold + P7/P8 filter streamed off payload bytes; survivors go to
-    * `sink`. Returns [[FoldUnsorted]] when span offsets arrive unsorted (the
-    * hash/fold contract is sort-by-offset — callers then run the object
-    * path; never happens for Synth payloads, whose spans are generated in
-    * reading order). */
-  private def paragraphsFoldStreaming(payload: Array[Byte], minSents: Int, minWords: Int,
-      sink: ParaSink): Int = {
     var p = docBlockStart(payload)
+    if (p < 0) return null
     val docIdLen = readIntAt(payload, p)
     p += 4 + math.max(0, docIdLen) // -1 = null doc_id: no bytes follow
     val nSpans = readIntAt(payload, p); p += 4
-    // Paragraph content accumulates as UTF-8 BYTES in a per-thread scratch;
-    // a String materializes only for filter SURVIVORS (and for starter spans,
-    // whose reference-numeral extraction is a String regex). The
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    // Paragraph content accumulates as UTF-8 BYTES in a per-thread scratch
+    // and only filter SURVIVORS are copied out. The
     // StringBuilder fold decoded + re-encoded every paragraph — ~30 GB of
     // char[]/String/encode churn per mega wave (JFR round 4). Byte-wise
     // trim/filter is exact: String.trim strips chars ≤ ' ' and every byte of
@@ -539,7 +468,15 @@ object Wire {
       while (s0 < e0 && (cbuf(s0) & 0xFF) <= ' ') s0 += 1
       while (e0 > s0 && (cbuf(e0 - 1) & 0xFF) <= ' ') e0 -= 1
       if (graft.operators.Segregate.sentKeepBytes(cbuf, s0, e0, minSents, minWords))
-        sink.emit(pageStart + 1, seq, cbuf, s0, e0 - s0, reference)
+        out += new GenericInternalRow(Array[Any](pageStart + 1, seq,
+          // MUST copy: cbuf is the reusable fold scratch, and
+          // UTF8String.fromBytes(buf, ..) WRAPS the array — an aliased view
+          // would be overwritten by the next paragraph before Catalyst
+          // copies the returned array into the output row (caught live in
+          // round 4: every row read back as the last paragraph's bytes).
+          // One exact-size copy per filter SURVIVOR.
+          UTF8String.fromBytes(java.util.Arrays.copyOfRange(cbuf, s0, e0)),
+          if (reference == null) null else UTF8String.fromString(reference)))
     }
     var i = 0
     while (i < nSpans) {
@@ -550,7 +487,7 @@ object Wire {
       val mediaLen = readIntAt(payload, p)
       p = p + 4 + math.max(mediaLen, 0)
       val offset = readIntAt(payload, p); p += 4
-      if (offset < prevOffset) return FoldUnsorted // honor the sort contract
+      if (offset < prevOffset) return paragraphsUnsorted(payload, minSents, minWords)
       prevOffset = offset
 
       val kind = kindOf(payload, kindStart, math.max(kindLen, 0))
@@ -585,7 +522,24 @@ object Wire {
     }
     // no final flush — the trailing open paragraph is dropped (reference
     // quirk preserved; see Segregate.segregateDoc)
-    FoldOk
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+  }
+
+  /** [[paragraphsArrayData]] for offset-unsorted spans: the object fold,
+    * which sorts, + the same filter. */
+  private def paragraphsUnsorted(payload: Array[Byte], minSents: Int,
+      minWords: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+    import graft.operators.Segregate
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    val d = decodeDoc(payload).get
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Segregate.segregateDoc(d.doc_id, "plain", d.spans)
+        .filter(q => Segregate.sentKeep(q.content, minSents, minWords))
+        .map(q => new GenericInternalRow(Array[Any](q.page, q.paragraph_number,
+          UTF8String.fromString(q.content),
+          if (q.reference == null) null else UTF8String.fromString(q.reference))))
+        .toArray[Any])
   }
 
   private val paraScratch: ThreadLocal[Array[Byte]] =

@@ -35,7 +35,8 @@ object MicroBench {
     val hashSecs = (System.nanoTime() - t0) / 1e9
 
     val t1 = System.nanoTime()
-    Segregate.paragraphs(docs.as[Doc]).toDF()
+    Segregate.paragraphsOfPayloads(docs.as[Doc]
+        .map(d => (d.doc_id, graft.sources.Wire.encode(Nil, Some(d)))).toDF("doc_id", "payload"))
       .write.format("noop").mode("overwrite").save()
     val segSecs = (System.nanoTime() - t1) / 1e9
 

@@ -7,10 +7,12 @@ import graft.sources.{Synth, SynthConfig}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the typed (plain-Scala) kernels to their Catalyst twins: same
-  * hashes, same rendering strings, same filter decisions. The crawler runs
-  * the typed path (array HOFs are interpreted CodegenFallback in Spark —
-  * measured ~10 ms/doc); the Column path is the query-surface API. */
+/** Pins the crawl's byte kernels to their references: the streaming doc
+  * hashes to Dedup.docHashes over decoded spans, the paragraph kernel to
+  * segregateDoc + the regex filter, the fetch encoder to the object
+  * encoder, and the typed hash/starter helpers to their Catalyst/regex
+  * definitions. The crawl runs the byte kernels; the references are the
+  * specification. */
 class HashingSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -22,25 +24,7 @@ class HashingSpec extends AnyFunSuite {
     assert(fromCol.toSeq === fromScala)
   }
 
-  test("typed renderings equal Column renderings on synth docs") {
-    val cfg = SynthConfig()
-    val docs = (0L until 30L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i)))
-    val byId = docs.toDS.toDF.select(
-      $"doc_id",
-      Segregate.renderPlain($"spans").as("p"),
-      Segregate.renderNoDigits($"spans").as("n"),
-      Segregate.renderMarked($"spans").as("m"))
-      .as[(String, String, String, String)].collect()
-      .map { case (id, p, n, m) => id -> ((p, n, m)) }.toMap
-    docs.foreach { d =>
-      val (p, n, m) = (byId(d.doc_id)._1, byId(d.doc_id)._2, byId(d.doc_id)._3)
-      assert(p === Segregate.renderPlainStr(d.spans), s"plain ${d.doc_id}")
-      assert(n === Segregate.renderNoDigitsStr(d.spans), s"nodigits ${d.doc_id}")
-      assert(m === Segregate.renderMarkedStr(d.spans), s"marked ${d.doc_id}")
-    }
-  }
-
-  test("typed sentKeepStr equals the Column sentCountFilter") {
+  test("sentKeep equals the Column sentCountFilter reference") {
     val paras = Seq(
       "One. Two. Three.",
       "Short. Text.",
@@ -50,9 +34,9 @@ class HashingSpec extends AnyFunSuite {
       "1. 2. 3!? mixed punctuation here",
       ("content " * 40).trim)
     val df = paras.zipWithIndex.map { case (c, i) => (i, c) }.toDF("id", "content")
-    val keptCol = Segregate.sentCountFilter(df).select($"id").as[Int].collect().toSet
+    val keptCol = ParagraphReference.sentCountFilter(df).select($"id").as[Int].collect().toSet
     val keptScala = paras.zipWithIndex.collect {
-      case (c, i) if Segregate.sentKeepStr(c) => i
+      case (c, i) if Segregate.sentKeep(c) => i
     }.toSet
     assert(keptCol === keptScala)
   }
@@ -81,8 +65,11 @@ class HashingSpec extends AnyFunSuite {
   }
 
   test("Wire.paragraphsFilteredStreaming equals segregateDoc+sentKeepStr on objects") {
-    val cfg = SynthConfig()
-    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i)))
+    // Named for the object-returning fold and String filter this pair
+    // replaced: the kernel is now the Catalyst fold `paragraphsArrayData`,
+    // the object path `segregateDoc` + `Segregate.sentKeep` (the offset-
+    // unsorted fallback's own filter). Every row field is compared on the
+    // adversarial shapes the synthetic corpus does not produce.
     val weird = Seq(
       Doc("w0", Seq(Span("text", "1. ü¶€ starter. Two. Three sentences here.", null, 0),
         Span("text", "continuation text", null, 1), Span("text", "2. next", null, 2))),
@@ -102,35 +89,43 @@ class HashingSpec extends AnyFunSuite {
       Doc("w7", Seq(Span("text", "12. 34 not a second rep. One. Two. Three.", null, 0))),
       Doc("w8", Seq(Span("text", "5 . nbsp ref. One. Two. Three.", null, 0))),
       Doc("w9", Seq(Span("text", "𐄇. aegean ref. One. Two. Three.", null, 0))))
-    (synthDocs ++ weird).foreach { d =>
-      val payload = graft.sources.Wire.encode(Nil, Some(d))
-      val streamed = graft.sources.Wire.paragraphsFilteredStreaming(payload, "plain")
+    val cfg = SynthConfig()
+    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i)))
+    (weird ++ synthDocs).foreach { d =>
       val objects = Segregate.segregateDoc(d.doc_id, "plain", d.spans)
-        .filter(p => Segregate.sentKeepStr(p.content))
-      assert(streamed === objects, s"streaming paragraph mismatch for ${d.doc_id}")
+        .filter(p => Segregate.sentKeep(p.content))
+        .map(p => (p.page, p.paragraph_number, p.content, p.reference))
+      assert(kernelRows(d) === objects, s"paragraph kernel mismatch for ${d.doc_id}")
     }
+    assert(weird.exists(d => kernelRows(d).nonEmpty), "the adversarial docs must keep paragraphs")
   }
 
   test("Wire.paragraphsArrayData CONTENT equals the object path (no scratch aliasing)") {
-    // Regression (round 4): the Catalyst sink wrapped the reusable fold
-    // scratch zero-copy (UTF8String.fromBytes aliases the array), so every
-    // row read back as the LAST paragraph's bytes once the fold moved on —
-    // counts matched, content was garbage. This pins the actual strings of
-    // the wireParagraphs column against paragraphsFilteredStreaming.
+    // The object path is segregateDoc + the regex filter on Span objects.
+    // Content is compared as strings, not counts: the round-4 kernel wrapped
+    // its reusable content scratch zero-copy (UTF8String.fromBytes aliases
+    // the array), so every row read back as the LAST paragraph's bytes once
+    // the fold moved on — counts matched, content was garbage.
     val cfg = SynthConfig()
-    (0L until 25L).foreach { i =>
-      val d = Doc(s"d$i", Synth.spansOf(cfg, i))
-      val payload = graft.sources.Wire.encode(Nil, Some(d))
-      val obj = graft.sources.Wire.paragraphsFilteredStreaming(payload, "plain")
-      val arr = graft.sources.Wire.paragraphsArrayData(payload, "plain", 3, 30)
-      assert(arr != null, s"null array for d$i")
-      val viaExpr = (0 until arr.numElements()).map { k =>
-        val r = arr.getStruct(k, 4)
-        (r.getInt(0), r.getInt(1), r.getUTF8String(2).toString,
-          if (r.isNullAt(3)) null else r.getUTF8String(3).toString)
-      }
-      val viaObj = obj.map(p => (p.page, p.paragraph_number, p.content, p.reference))
-      assert(viaExpr === viaObj, s"wireParagraphs content mismatch for d$i")
+    val synthDocs = (0L until 40L).map(i => Doc(s"d$i", Synth.spansOf(cfg, i)))
+    synthDocs.foreach { d =>
+      val reference = ParagraphReference.paragraphs(d)
+        .map(p => (p.page, p.paragraph_number, p.content, p.reference))
+      assert(kernelRows(d) === reference, s"paragraph kernel mismatch for ${d.doc_id}")
+    }
+    assert(synthDocs.exists(d => ParagraphReference.paragraphs(d).size > 1),
+      "the synth docs must hold multi-paragraph survivors for the aliasing check")
+  }
+
+  /** The paragraph kernel's rows for `d` at the default thresholds (3,30), as
+    * (page, paragraph_number, content, reference). */
+  private def kernelRows(d: Doc): Seq[(Int, Int, String, String)] = {
+    val arr = graft.sources.Wire.paragraphsArrayData(graft.sources.Wire.encode(Nil, Some(d)), 3, 30)
+    assert(arr != null, s"null array for ${d.doc_id}")
+    (0 until arr.numElements()).map { k =>
+      val r = arr.getStruct(k, 4)
+      (r.getInt(0), r.getInt(1), r.getUTF8String(2).toString,
+        if (r.isNullAt(3)) null else r.getUTF8String(3).toString)
     }
   }
 

@@ -105,13 +105,23 @@ class SegregateSpec extends AnyFunSuite {
       ("p3", ("word " * 31).trim + "."),                // 31 content words → kept
       ("p4", "the a of and to in on for with by")       // all stopwords → dropped
     ).toDF("doc_id", "content")
-    val kept = Segregate.sentCountFilter(paras).select("doc_id").as[String].collect().toSet
+    val kept = ParagraphReference.sentCountFilter(paras).select("doc_id").as[String].collect().toSet
     assert(kept === Set("p1", "p3"))
+    val keptByKernel = paras.as[(String, String)].collect()
+      .collect { case (id, c) if Segregate.sentKeep(c) => id }.toSet
+    assert(keptByKernel === kept)
   }
 
-  test("sentenceCountScan equals the regex split count (property over punct/ws shapes)") {
-    val pat = java.util.regex.Pattern.compile("[.!?]+(\\s+|$)")
-    def regexCount(s: String): Int = pat.split(s).count(_.trim.nonEmpty)
+  /** `sentKeepBytes` on `s` as the whole array and as a slice inside
+    * padding (proves the slice offsets are honored). */
+  private def keepBoth(s: String, minSents: Int, minWords: Int): (Boolean, Boolean) = {
+    val b = s.getBytes("UTF-8")
+    val padded = ("XX" + s + "YY").getBytes("UTF-8")
+    (Segregate.sentKeepBytes(b, 0, b.length, minSents, minWords),
+      Segregate.sentKeepBytes(padded, 2, padded.length - 2, minSents, minWords))
+  }
+
+  test("sentKeepBytes sentence leg equals the regex split count (property)") {
     val fixed = Seq(
       "", " ", ".", "...", "a.", "a.b", "a. b", "a.. .b", "a!!x", "a!. \tb",
       "one. two! three? four", ". leading", " . ", "a . b", "tab.\tnext",
@@ -126,12 +136,23 @@ class SegregateSpec extends AnyFunSuite {
         alphabet(Math.floorMod(h, alphabet.length.toLong).toInt)
       }.mkString
     }
-    (fixed ++ rand).foreach { s =>
-      assert(Segregate.sentenceCountScan(s) === regexCount(s), s"mismatch on '${s.replace("\n", "\\n").replace("\t", "\\t")}'")
+    // minWords out of reach: the decision is the sentence leg alone
+    for (s <- fixed ++ rand; minSents <- 0 to 4) {
+      val want = ParagraphReference.sentenceCount(s) >= minSents
+      assert(keepBoth(s, minSents, Int.MaxValue) === ((want, want)),
+        s"mismatch at $minSents on '${s.replace("\n", "\\n").replace("\t", "\\t")}'")
     }
   }
 
+  // The two properties below keep the names of the String scanner
+  // (`sentKeepStr`) they were first written against. That scanner is gone:
+  // the String entry is now `Segregate.sentKeep`, which encodes to UTF-8 and
+  // runs `sentKeepBytes`, and the String-side definition both are pinned to
+  // is the regex reference in `ParagraphReference`.
+
   test("sentKeepBytes equals sentKeepStr on the UTF-8 slice (property incl. non-ASCII)") {
+    // non-ASCII (the word leg's decoded-regex branch), supplementary-plane
+    // chars, padding and whitespace shapes
     val fixed = Seq(
       "", " ", "the the the", "One. Two. Three.", "word " * 35,
       "the of to in on for with by " * 5, "a! b? c.", "x.. y",
@@ -141,8 +162,7 @@ class SegregateSpec extends AnyFunSuite {
       Segregate.Stopwords.mkString(" "),
       (Segregate.Stopwords.take(15) ++ Seq("realword")).mkString(" ") * 3)
     // BMP-only alphabet: indexing by char would split a supplementary pair
-    // into unpaired surrogates, and the JDK encoder turns those into '?' —
-    // the byte and String paths would then see different content
+    // into unpaired surrogates, which the UTF-8 encoder turns into '?'
     val alphabet = "abc theof .!?üé\t"
     var h = 5555L
     val rand = (1 to 400).map { _ =>
@@ -153,27 +173,15 @@ class SegregateSpec extends AnyFunSuite {
       }.mkString
     }
     for (s <- fixed ++ rand; minSents <- Seq(1, 3); minWords <- Seq(3, 30)) {
-      val b = s.getBytes("UTF-8")
-      // embed in padding to prove slice offsets are honored
-      val padded = ("XX" + s + "YY").getBytes("UTF-8")
-      assert(Segregate.sentKeepBytes(b, 0, b.length, minSents, minWords)
-        === Segregate.sentKeepStr(s, minSents, minWords), s"'$s' ($minSents,$minWords)")
-      assert(Segregate.sentKeepBytes(padded, 2, padded.length - 2, minSents, minWords)
-        === Segregate.sentKeepStr(s, minSents, minWords), s"padded '$s'")
+      val want = ParagraphReference.keep(s, minSents, minWords)
+      assert(keepBoth(s, minSents, minWords) === ((want, want)),
+        s"'$s' ($minSents,$minWords)")
     }
   }
 
   test("sentKeepStr scans equal the reference regex implementation (property)") {
-    val sentPat = java.util.regex.Pattern.compile("[.!?]+(\\s+|$)")
-    val wordPat = java.util.regex.Pattern.compile("[^\\p{L}]+")
-    val stop = Segregate.Stopwords.toSet
-    def ref(content: String, minSents: Int, minWords: Int): Boolean = {
-      val sents = sentPat.split(content).count(_.trim.nonEmpty)
-      if (sents >= minSents) return true
-      wordPat.split(content.toLowerCase).count(w => w.nonEmpty && !stop.contains(w)) >= minWords
-    }
     val stops = Segregate.Stopwords
-    // word/punct mixes, stopword-heavy, long-token, unicode fallback
+    // word/punct mixes, stopword-heavy, long-token, unicode
     val fixed = Seq(
       "", "the the the the", "alpha beta gamma", "word " * 40,
       "the quick brown fox jumps over the lazy dog " * 4,
@@ -191,8 +199,10 @@ class SegregateSpec extends AnyFunSuite {
       }.mkString(" ")
     }
     for (s <- fixed ++ rand; minSents <- Seq(1, 3); minWords <- Seq(5, 30)) {
-      assert(Segregate.sentKeepStr(s, minSents, minWords) === ref(s, minSents, minWords),
+      val want = ParagraphReference.keep(s, minSents, minWords)
+      assert(Segregate.sentKeep(s, minSents, minWords) === want,
         s"mismatch (minSents=$minSents minWords=$minWords) on '${s.take(80)}'")
+      assert(keepBoth(s, minSents, minWords) === ((want, want)), s"slices of '${s.take(80)}'")
     }
   }
 
@@ -249,7 +259,7 @@ class SegregateSpec extends AnyFunSuite {
     import graft.sources.{Synth, SynthConfig}
     val cfg = SynthConfig()
     val docs = (0L until 20L).map(c => Doc(s"d$c", Synth.spansOf(cfg, c)))
-    val typed = Segregate.paragraphs(docs.toDS).collect()
+    val typed = docs.toDS.flatMap(d => Segregate.segregateDoc(d.doc_id, "plain", d.spans)).collect()
       .map(p => (p.doc_id, p.paragraph_number, p.content, p.reference, p.page)).toSet
 
     // relational cross-check (SURVEY.md W1(b)): explode, running sum of
